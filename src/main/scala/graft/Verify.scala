@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,25 +10,20 @@ object Verify {
     // the driver always passes two args and gets every query.
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet stores TIMESTAMP(NANOS); Spark can only read it as long
-      // (graft.sources.Lake converts back to TimestampType at micros precision)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LakeSession.create()
     new java.io.File(outDir).mkdirs()
     val entries = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }.toSeq
+    // a query that fails is named at the end and fails the run (rc 1), after
+    // every other dump and oracle_sql.json are written: a missing dump must
+    // never shrink the oracle gate silently
+    val failed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     def dump(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed.add(name)
       }
     // SPARK_GRAFT_VERIFY_PAR > 1 submits that many queries concurrently into
     // the one SparkSession (each writes its own directory, so results are
@@ -58,5 +54,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (!failed.isEmpty) {
+      System.err.println(s"[verify] FAILED: ${failed.asScala.toSeq.sorted.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -30,8 +30,8 @@ object Lake {
     // The events table's `ts` contract is a UTC instant (TimestampType), but
     // lake files come from mixed writers: the driver-generated lake stores
     // TIMESTAMP(NANOS), which Spark reads only as raw nanos-since-epoch longs
-    // (spark.sql.legacy.parquet.nanosAsLong=true — set by Verify/Bench/test
-    // sessions); other engines write TIMESTAMP_NTZ with UTC wall-clock values.
+    // (spark.sql.legacy.parquet.nanosAsLong=true — set by graft.LakeSession,
+    // the one session constructor); other engines write TIMESTAMP_NTZ with UTC wall-clock values.
     // Normalize both to TimestampType (micros) so every downstream time op
     // sees one type regardless of who wrote the file.
     if (name == "events") df.schema("ts").dataType match {

@@ -66,50 +66,29 @@ class ComponentsSpec extends SparkSpec {
     // jobs); raw job counts under-determine (AQE splits one action into a job
     // per materialized stage). Also record each job's short call site: an
     // eager localCheckpoint would show up as a per-round "count at ..." job.
-    val execIds = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val countJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val id = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-          .getOrElse(s"job-${e.jobId}")
-        execIds.add(id)
-        val site = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("")
-        if (site.startsWith("count at")) countJobs.add(s"$id:$site")
-      }
-    }
     val path = (0L until 40L).map(i => (i, i + 1)).toDF("a", "b")
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val (labels, rounds) =
-        Components.connectedComponentsWithRounds(path, "a", "b",
-          maxLocalEdges = -1L)
-      // drain the async listener bus: poll until the count stops moving
-      var last = -1
-      var stable = 0
-      val deadline = System.nanoTime() + 10e9.toLong
-      while (stable < 3 && System.nanoTime() < deadline) {
-        val now = execIds.size()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-        Thread.sleep(100)
-      }
-      val actionsDuring = execIds.size()
-      assert(rounds >= 2, s"path graph should need several rounds, got $rounds")
-      // Per round: one execution materializing the round's shuffles (AQE
-      // stages under the lazy checkpoint's wrapper) + the fused
-      // count+fingerprint checksum action. Plus the same pair once for the
-      // initial edge list. Nothing else may run a job — in particular no
-      // per-round eager-checkpoint full-pass count job.
-      assert(actionsDuring <= 2 * (rounds + 1),
-        s"expected <= ${2 * (rounds + 1)} job-running executions " +
-          s"($rounds rounds), got $actionsDuring")
-      assert(countJobs.isEmpty,
-        s"eager-checkpoint count jobs detected: $countJobs")
-      // and the result is still right (materialization-by-checksum is sound)
-      val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got.size === 41 && got.values.forall(_ == 0L))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val ((labels, rounds), rec) = Counters.measure(spark) {
+      Components.connectedComponentsWithRounds(path, "a", "b",
+        maxLocalEdges = -1L)
+    }
+    def execId(j: Counters.Job) = j.executionId.fold(s"job-${j.id}")(_.toString)
+    val actionsDuring = rec.jobs.map(execId).toSet.size
+    val countJobs = rec.jobs.filter(_.callSite.startsWith("count at"))
+      .map(j => s"${execId(j)}:${j.callSite}").toSet
+    assert(rounds >= 2, s"path graph should need several rounds, got $rounds")
+    // Per round: one execution materializing the round's shuffles (AQE
+    // stages under the lazy checkpoint's wrapper) + the fused
+    // count+fingerprint checksum action. Plus the same pair once for the
+    // initial edge list. Nothing else may run a job — in particular no
+    // per-round eager-checkpoint full-pass count job.
+    assert(actionsDuring <= 2 * (rounds + 1),
+      s"expected <= ${2 * (rounds + 1)} job-running executions " +
+        s"($rounds rounds), got $actionsDuring")
+    assert(countJobs.isEmpty,
+      s"eager-checkpoint count jobs detected: $countJobs")
+    // and the result is still right (materialization-by-checksum is sound)
+    val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got.size === 41 && got.values.forall(_ == 0L))
   }
 
   /** Reference labels: driver-side union-find linking larger roots under

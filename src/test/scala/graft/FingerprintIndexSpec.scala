@@ -59,24 +59,13 @@ class FingerprintIndexSpec extends SparkSpec {
         Seq(1L -> "seen doc").toDF("doc_id", "text"), "text", idx, 0L)
       val batch = Seq(10L -> "new doc", 11L -> "seen doc")
         .toDF("doc_id", "text")
-      @volatile var jobs = 0
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs += 1
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val got = FingerprintIndex.step(batch, "text", idx, 1L,
+      val (got, rec) = Counters.measure(spark) {
+        FingerprintIndex.step(batch, "text", idx, 1L,
           expectedHistoryRows = 1000L, expectedBatchRows = bound)
           .select("doc_id").as[Long].collect().toSet
-        assert(got == Set(10L))
-        var last = -1; var spins = 0
-        while (jobs != last && spins < 50) {
-          last = jobs; Thread.sleep(100); spins += 1
-        }
-        jobs
-      } finally spark.sparkContext.removeSparkListener(listener)
+      }
+      assert(got == Set(10L))
+      rec.jobs.size
     }
     val withBound = jobsFor(1000L, "mb1")
     val hllPath = jobsFor(-1L, "mb2")

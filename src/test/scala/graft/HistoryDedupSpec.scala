@@ -96,21 +96,12 @@ class HistoryDedupSpec extends SparkSpec {
 
   test("expectedBatchRows: a caller-supplied manifest bound replaces the " +
        "eager HLL scan — hint follows the bound, output identical") {
-    val sc = spark.sparkContext
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs += 1
-    }
     // under the cap: hint present; the only plan-time job is the Bloom build
-    sc.addSparkListener(listener)
-    val bounded = try {
-      val d = HistoryDedup.newAgainstHistory(batch, history, "text", 1000L,
+    val (bounded, rec) = Counters.measure(spark) {
+      HistoryDedup.newAgainstHistory(batch, history, "text", 1000L,
         expectedBatchRows = 10L)
-      var last = -1; var spins = 0
-      while (jobs != last && spins < 50) { last = jobs; Thread.sleep(100); spins += 1 }
-      d
-    } finally sc.removeSparkListener(listener)
+    }
+    val jobs = rec.jobs.size
     assert(jobs <= 1, s"manifest bound must not add an eager scan: $jobs jobs")
     assert(bounded.queryExecution.analyzed.toString.contains("ResolvedHint"))
     // over the cap via the bound alone: hints dropped, output unchanged

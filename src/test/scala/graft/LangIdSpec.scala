@@ -108,23 +108,10 @@ class LangIdSpec extends SparkSpec {
       yield (l, doc(l, i))).toDF("lang", "text")
     def docsDf(m: Int) = (0 until m).map(i =>
       (i.toLong, doc(vocabs.keys.toSeq.sorted.apply(i % 3), 5000 + i))).toDF("doc_id", "text")
-    def records(m: Int): Long = {
-      val sc = spark.sparkContext
-      @volatile var recs = 0L
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            recs += t.taskMetrics.shuffleWriteMetrics.recordsWritten
-      }
-      sc.addSparkListener(listener)
-      try {
-        LangId.classify(train, docsDf(m), "doc_id", "text", "lang")
-          .write.format("noop").mode("overwrite").save()
-        var last = -1L; var spins = 0
-        while (recs != last && spins < 50) { last = recs; Thread.sleep(100); spins += 1 }
-        recs
-      } finally sc.removeSparkListener(listener)
-    }
+    def records(m: Int): Long = Counters.measure(spark) {
+      LangId.classify(train, docsDf(m), "doc_id", "text", "lang")
+        .write.format("noop").mode("overwrite").save()
+    }._2.shuffleWriteRecords
     val base = 400
     val delta = records(base * 10) - records(base)
     val extraDocs = base * 9

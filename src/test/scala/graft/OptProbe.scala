@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool (r13 optimization round): stage-by-stage wall decomposition of
@@ -8,22 +8,13 @@ import org.apache.spark.sql.functions._
   * plan actually costs, measured by materializing successively longer
   * prefixes of the chain to the noop sink. Each prefix is timed in its own
   * fresh-cache run, min of `reps`. Usage:
-  *   runMain graft.OptProbe <sfDir> [reps]
+  *   Test/runMain graft.OptProbe <sfDir> [reps]
   */
 object OptProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LakeSession.create()
 
     def noop(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
@@ -183,32 +174,18 @@ object OptProbe {
 
     // --- c03: per-JOB wall breakdown of one full run ---
     if (args.contains("--c03")) {
-      val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
-      val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Double)]()
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.put(e.jobId, (Option(e.properties.getProperty("spark.job.description"))
-            .orElse(Option(e.properties.getProperty("callSite.short")))
-            .getOrElse(""), System.nanoTime()))
-        override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val (d, t0) = jobs.getOrDefault(e.jobId, ("?", System.nanoTime()))
-          done.add((e.jobId, d, (System.nanoTime() - t0) / 1e9))
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
       spark.catalog.clearCache()
       // drop the stale thread-local description from the last time() call so
       // each job reports its own callSite
       spark.sparkContext.setJobDescription(null)
       val fn = SparkEntry.queries("c03_incremental_crawl")
       val t0 = System.nanoTime()
-      noop(fn(spark, sfDir))
+      val (_, rec) = Counters.measure(spark)(noop(fn(spark, sfDir)))
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500)
-      spark.sparkContext.removeSparkListener(l)
-      println(f"[opt] c03 wall: $wall%.2f s, jobs: ${done.size()}")
-      done.iterator().forEachRemaining { case (id, d, s) =>
-        println(f"[opt]   job $id%3d ${s}%6.2f s  $d")
+      println(f"[opt] c03 wall: $wall%.2f s, jobs: ${rec.jobs.size}")
+      rec.jobs.foreach { j =>
+        val label = if (j.description.nonEmpty) j.description else j.callSite
+        println(f"[opt]   job ${j.id}%3d ${j.wallMs / 1e3}%6.2f s  $label")
       }
     }
     spark.stop()

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Dedup, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: measure LSH recall of the embedding operators against their exact
@@ -13,14 +12,7 @@ import org.apache.spark.sql.functions._
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LakeSession.create()
     val e = graft.sources.Lake.table(spark, sfDir, "embeddings")
     // RECALL_SECTIONS gates the embedding sections (the d06 exact all-pairs
     // oracle is quadratic — ~15 min at sf1), so a d03-only run stays cheap.

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Components, Dedup, Multimodal, RangeJoin}
@@ -59,20 +59,11 @@ object Scaling {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_SCALING_OUT", "SCALING_LAST.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_SCALING_RUNS", "2").toInt
     // dev knob: SPARK_GRAFT_SCALING_ONLY="d07,st04" limits the run (unset -> all)
     val only = sys.env.get("SPARK_GRAFT_SCALING_ONLY")
       .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LakeSession.create()
 
     def tbl(name: String): DataFrame = graft.sources.Lake.table(spark, sfDir, name)
 
@@ -82,7 +73,10 @@ object Scaling {
     // narrow-map cases at runs=1), and a dedicated discard run on top would
     // re-execute the heaviest cases (full stream-stream joins, iterative CC)
     // a fourth time for nothing.
+    // Every execution starts from an empty cache, as in Bench: c02/c04 persist
+    // their extraction, and a timed run must not read an earlier run's copy.
     def countingWarmup(mk: () => DataFrame): Long = {
+      spark.catalog.clearCache()
       val obs = org.apache.spark.sql.Observation()
       mk().observe(obs, count(lit(1)).as("n"))
         .write.format("noop").mode("overwrite").save()
@@ -90,6 +84,7 @@ object Scaling {
     }
     def timeMinPrewarmed(mk: () => DataFrame): Double = {
       def once(): Double = {
+        spark.catalog.clearCache()
         val t0 = System.nanoTime()
         mk().write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9

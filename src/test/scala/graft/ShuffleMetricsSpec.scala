@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 
 /** Plan-shape tests pin STRUCTURE; this spec pins actual shuffle VOLUME via
@@ -8,27 +7,10 @@ import org.apache.spark.sql.DataFrame
   * bytes really don't move". */
 class ShuffleMetricsSpec extends SparkSpec {
 
-  /** Total shuffle-write bytes of one action, via a task-metrics listener. */
-  private def shuffleWriteBytes(df: DataFrame): Long = {
-    val sc = spark.sparkContext
-    @volatile var bytes = 0L
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          bytes += t.taskMetrics.shuffleWriteMetrics.bytesWritten
-    }
-    sc.addSparkListener(listener)
-    try {
-      df.write.format("noop").mode("overwrite").save()
-      // listener bus is async; poll until the metric stabilizes
-      var last = -1L
-      var spins = 0
-      while (bytes != last && spins < 50) {
-        last = bytes; Thread.sleep(100); spins += 1
-      }
-      bytes
-    } finally sc.removeSparkListener(listener)
-  }
+  /** Total shuffle-write bytes of one action. */
+  private def shuffleWriteBytes(df: DataFrame): Long =
+    Counters.measure(spark)(df.write.format("noop").mode("overwrite").save())
+      ._2.shuffleWriteBytes
 
   test("heap top-k aggregate shuffles a fraction of the window formulation") {
     // same question (top-3 lineitems per returnflag): the window plan must

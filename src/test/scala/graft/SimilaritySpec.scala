@@ -226,26 +226,16 @@ class SimilaritySpec extends SparkSpec {
        "construction fires <= 3 Spark jobs (was 1 + 2m)") {
     val e = Lake.table(spark, sf0001, "embeddings")
     val q = e.filter(col("vec_id") < 4)
-    val sc = spark.sparkContext
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    sc.addSparkListener(listener)
-    try {
+    val jobs = Counters.measure(spark) {
       Similarity.ivfPqTopK(e, q, "vec_id", "embedding", k = 5, dim = 64,
         m = 8, ks = 16, centroids = 8, nprobe = 4)
-      var last = -1; var spins = 0
-      while (jobs != last && spins < 50) { last = jobs; Thread.sleep(100); spins += 1 }
-      // coarse-centroid TakeOrdered + seed TakeOrdered + the ONE training
-      // aggregation (2 jobs under AQE: shuffle-map stage + result) — the
-      // driver-side seams, nothing per-subspace. m sequential kmeansStep
-      // jobs measured 17+ here.
-      assert(jobs <= 4, s"codebook training fired $jobs jobs — " +
-        "per-subspace sequential training is back")
-    } finally sc.removeSparkListener(listener)
+    }._2.jobs.size
+    // coarse-centroid TakeOrdered + seed TakeOrdered + the ONE training
+    // aggregation (2 jobs under AQE: shuffle-map stage + result) — the
+    // driver-side seams, nothing per-subspace. m sequential kmeansStep
+    // jobs measured 17+ here.
+    assert(jobs <= 4, s"codebook training fired $jobs jobs — " +
+      "per-subspace sequential training is back")
   }
 
   test("trainRows: sample-bounded codebook training — a sample covering the " +

@@ -1,37 +1,14 @@
 package graft
 
 import graft.operators.SkewJoin
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 class SkewJoinSpec extends SparkSpec {
 
   /** Max per-task shuffle-read record count across every stage `body` runs —
     * the actual skew a shuffled join inflicts on its hottest task. */
-  private def maxShuffleReadRecords(body: => Unit): Long = {
-    val maxRec = new java.util.concurrent.atomic.AtomicLong(0)
-    val l = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) {
-          val r = m.shuffleReadMetrics.recordsRead
-          maxRec.getAndUpdate(c => math.max(c, r))
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      // the listener bus is async — wait until the metric stops moving
-      var last = -1L; var still = 0
-      while (still < 5) {
-        Thread.sleep(100)
-        val v = maxRec.get()
-        if (v == last) still += 1 else { still = 0; last = v }
-      }
-      maxRec.get()
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
+  private def maxShuffleReadRecords(body: => Unit): Long =
+    Counters.measure(spark)(body)._2.tasks.map(_.shuffleReadRecords).maxOption.getOrElse(0L)
 
   test("zipf fixture: salting bounds the hot task's shuffle read; plain join cannot") {
     val s = spark; import s.implicits._

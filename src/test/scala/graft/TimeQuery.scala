@@ -1,12 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time individual SparkEntry queries standalone (same noop-sink
   * materialization as [[Bench]]) and dump their formatted plans — for chasing
   * bench outliers without rerunning the whole suite.
   *
-  * Usage: runMain graft.TimeQuery <sfDir> <query>... [-n reps] [-explain]
+  * Usage: Test/runMain graft.TimeQuery <sfDir> <query>... [-n reps] [-explain]
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
@@ -14,16 +12,7 @@ object TimeQuery {
     val reps = args.sliding(2).collectFirst { case Array("-n", n) => n.toInt }.getOrElse(4)
     val explain = args.contains("-explain")
     val names = args.drop(1).filterNot(a => a.startsWith("-") || a.forall(_.isDigit))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LakeSession.create()
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       if (explain) fn(spark, sfDir).explain("formatted")

@@ -107,10 +107,14 @@ for name in all_q:
     else:
         print(f"OK   {name}: {len(g)} rows x {len(gc)} cols exact match")
         record(name, True, rows=len(g), cols=len(gc))
-missing = sorted(set(oracle) - set(all_q))
-if missing:
-    print(f"WARN: oracle entries with no output: {missing}")
-print(f"\n{'PASS' if fails == 0 else 'FAIL'}: {len(all_q) - fails}/{len(all_q)} queries clean")
+# an oracle entry in scope with no output is a query that failed before its
+# write started: a FAIL, never a silently smaller denominator
+missing = sorted(q for q in oracle if q not in all_q and (not only or q in only))
+for name in missing:
+    print(f"FAIL {name}: no output directory"); fails += 1
+    record(name, False, err="no output directory")
+total = len(all_q) + len(missing)
+print(f"\n{'PASS' if fails == 0 else 'FAIL'}: {total - fails}/{total} queries clean")
 if report_path:
     json.dump({"sf_dir": sf_dir, "clean": fails == 0, "queries": report},
               open(report_path, "w"), indent=1)

@@ -21,8 +21,11 @@ workers = int(sys.argv[5]) if len(sys.argv) > 5 else 4
 tool = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                     "compare_oracle.py")
 
-queries = sorted(d for d in os.listdir(out_dir)
-                 if os.path.isdir(os.path.join(out_dir, d)))
+# every oracle entry too, so a query that left no output is compared (and
+# fails) instead of dropping out of the report
+queries = sorted({d for d in os.listdir(out_dir)
+                  if os.path.isdir(os.path.join(out_dir, d))} |
+                 set(json.load(open(os.path.join(out_dir, "oracle_sql.json")))))
 
 
 def run_one(name):

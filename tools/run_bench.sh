@@ -1,27 +1,7 @@
 #!/usr/bin/env bash
-# Isolated bench run: launches graft.Bench in a fresh plain-java JVM (no sbt
-# in the measurement process, no concurrent compile). Compile first with
-# `sbt compile`. Usage: tools/run_bench.sh [out.json] [sf_dir]
-# Env: SPARK_GRAFT_CLASSES overrides the classes dir (e.g. a snapshot copy so
-# a concurrent `sbt compile` can't mutate bytecode under the measured JVM);
-# SPARK_DRIVER_MEM overrides -Xmx (default 32g).
+# Isolated bench run: graft.Bench in a fresh plain-java JVM
+# (tools/java_main.sh). Usage: tools/run_bench.sh [out.json] [sf_dir]
 set -euo pipefail
-# Resolve OUT against the caller's cwd BEFORE cd'ing to the repo root, so a
-# relative path lands where the caller expects.
 OUT="$(realpath -m "${1:-BENCH_LAST.json}")"
-cd "$(dirname "$0")/.."
-SF="${2:-/root/testdata/sf0.1}"
-CLASSES="${SPARK_GRAFT_CLASSES:-target/scala-2.13/classes}"
-[ -d "$CLASSES" ] || { echo "run 'sbt compile' first" >&2; exit 2; }
-# --add-opens list: single source of truth in tools/add_opens.txt (shared
-# with build.sbt's jdk17AddOpens — the sbt-side forked-JVM equivalent).
-ADD_OPENS=""
-while IFS= read -r p || [ -n "$p" ]; do
-  case "$p" in ''|'#'*) continue;; esac
-  ADD_OPENS="$ADD_OPENS --add-opens $p=ALL-UNNAMED"
-done < tools/add_opens.txt
-SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_BENCH_OUT="$OUT" \
-exec java $ADD_OPENS \
-  -Xmx"${SPARK_DRIVER_MEM:-32g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CLASSES:/opt/spark/jars/*" graft.Bench
+SPARK_GRAFT_SF_DIR="${2:-/root/testdata/sf0.1}" SPARK_GRAFT_BENCH_OUT="$OUT" \
+exec "$(dirname "$0")/java_main.sh" graft.Bench

@@ -1,23 +1,9 @@
 #!/usr/bin/env bash
-# Isolated scaling run: graft.Scaling in a fresh plain-java JVM (same launcher
-# shape as run_bench.sh). Compile first with `sbt compile`.
+# Isolated scaling run: the graft.Scaling dev tool (compiled with the tests)
+# in a fresh plain-java JVM (tools/java_main.sh).
 # Usage: tools/run_scaling.sh [out.json] [sf_dir]
-# Env: SPARK_GRAFT_CLASSES overrides the classes dir; SPARK_DRIVER_MEM -Xmx.
 set -euo pipefail
 OUT="$(realpath -m "${1:-SCALING_LAST.json}")"
-cd "$(dirname "$0")/.."
-SF="${2:-/root/testdata/sf0.01}"
-CLASSES="${SPARK_GRAFT_CLASSES:-target/scala-2.13/classes}"
-[ -d "$CLASSES" ] || { echo "run 'sbt compile' first" >&2; exit 2; }
-# --add-opens list: single source of truth in tools/add_opens.txt (shared
-# with build.sbt's jdk17AddOpens).
-ADD_OPENS=""
-while IFS= read -r p || [ -n "$p" ]; do
-  case "$p" in ''|'#'*) continue;; esac
-  ADD_OPENS="$ADD_OPENS --add-opens $p=ALL-UNNAMED"
-done < tools/add_opens.txt
-SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_SCALING_OUT="$OUT" \
-exec java $ADD_OPENS \
-  -Xmx"${SPARK_DRIVER_MEM:-32g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CLASSES:/opt/spark/jars/*" graft.Scaling
+SPARK_GRAFT_CLASSES="${SPARK_GRAFT_CLASSES:-target/scala-2.13/classes:target/scala-2.13/test-classes}" \
+SPARK_GRAFT_SF_DIR="${2:-/root/testdata/sf0.01}" SPARK_GRAFT_SCALING_OUT="$OUT" \
+exec "$(dirname "$0")/java_main.sh" graft.Scaling

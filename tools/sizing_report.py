@@ -1,13 +1,13 @@
 #!/usr/bin/env python3
-"""Turn graft.Sizing measurements into SIZING.md — the per-operator 100 TB
-capacity sheet.
+"""Turn graft.Bench records into SIZING.md — the per-operator 100 TB capacity
+sheet.
 
-Measured inputs per op (task-metrics listener, deterministic per plan+data):
-scan row count, shuffle-write bytes/records. Task-level input BYTES are not
-used: Spark's per-task bytesRead is unreliable under local[*] (it reported
-~0.2% of a verified 10.8 MB scan), so the compressed-input denominator comes
-from the lake parquet files themselves (file size / rows of each op's dominant
-input table).
+Measured inputs per op (the `volumes` Bench counts on each query's first
+warm-up execution, deterministic per plan+data): scan row count, shuffle-write
+bytes/records. Bench records no task-level input BYTES: Spark's per-task
+bytesRead is unreliable under local[*] (it reported ~0.2% of a verified
+10.8 MB scan), so the compressed-input denominator comes from the lake parquet
+files themselves (file size / rows of each op's dominant input table).
 
 Extrapolation model per op: grow the dominant input table to 100 TB compressed
 at its measured bytes/row, scale the measured shuffle volume by the same
@@ -18,6 +18,7 @@ across the decade — near 1.0 means the per-row shuffle cost held and the
 linear extrapolation is evidence, not hope.
 
 Usage: sizing_report.py SMALL.json SMALL_LAKE [BIG.json BIG_LAKE] [out.md]
+  (each .json is a Bench record, e.g. BENCH_LAST.json or its captured stdout)
 """
 import json, os, sys
 
@@ -62,7 +63,11 @@ def table_stats(lake, table):
 
 
 def load(path):
-    return json.load(open(path))
+    """The last Bench line in `path`, with its counted volumes as `ops`."""
+    line = [l for l in open(path) if '"metric":"total"' in l][-1]
+    rec = json.loads(line[line.index('{'):])
+    return {"sf": rec["sf"],
+            "ops": {op: v for op, v in rec["volumes"].items() if v is not None}}
 
 
 args = sys.argv[1:]
@@ -79,8 +84,8 @@ base, base_lake = (big, big_lake) if big else (small, small_lake)
 lines = [
     "# SIZING — per-operator 100 TB capacity sheet",
     "",
-    "Shuffle volume per heavy operator, measured (`graft.Sizing`: one "
-    "noop-sink run per query under a task-metrics listener — byte volumes "
+    "Shuffle volume per heavy operator, measured (`graft.Bench` counts each "
+    "query's first noop-sink warm-up run with `graft.Counters` — byte volumes "
     "are deterministic per plan + data, unlike wall times), extrapolated to "
     "a 100 TB compressed instance of each op's dominant input table at that "
     "table's measured bytes/row. Linearity of the extrapolation is measured "

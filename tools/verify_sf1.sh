@@ -9,7 +9,8 @@
 #   4. merge both phases into one report; an entry stays a documented skip only
 #      if the sequential retry also exceeded its cap
 # Usage: tools/verify_sf1.sh [report.json] [sf1_dir]
-# Env: SPARK_GRAFT_CLASSES (classes dir), SPARK_DRIVER_MEM (-Xmx, default 48g),
+# Env: SPARK_GRAFT_CLASSES (classes dir, see tools/java_main.sh),
+#      SPARK_DRIVER_MEM (-Xmx, default 48g),
 #      SPARK_GRAFT_CPUS (default 24), SF1_DUMP (dump dir, default /tmp/verify_sf1_dump),
 #      GRAFT_ROUND (archive dir suffix, REQUIRED — the merged report is also
 #      copied to verify_out/$GRAFT_ROUND/ so a later harness re-run can't
@@ -26,24 +27,16 @@ ROUND="$GRAFT_ROUND"
 cd "$(dirname "$0")/.."
 SF1="${2:-/tmp/sf1}"
 DUMP="${SF1_DUMP:-/tmp/verify_sf1_dump}"
-CLASSES="${SPARK_GRAFT_CLASSES:-target/scala-2.13/classes}"
-[ -d "$CLASSES" ] || { echo "run 'sbt compile' first" >&2; exit 2; }
-
 [ -f "$SF1/documents.parquet" ] || python3 tools/make_sf1.py "$SF1" 10
-
-ADD_OPENS=""
-while IFS= read -r p || [ -n "$p" ]; do
-  case "$p" in ''|'#'*) continue;; esac
-  ADD_OPENS="$ADD_OPENS --add-opens $p=ALL-UNNAMED"
-done < tools/add_opens.txt
 
 echo "[verify_sf1] dumping all queries at $SF1"
 rm -rf "$DUMP"
+# a query that fails exits Verify 1 after every other dump is written; the
+# compare below counts its missing output as a FAIL
 SPARK_GRAFT_VERIFY_PAR="${SPARK_GRAFT_VERIFY_PAR:-4}" \
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-24}" java $ADD_OPENS \
-  -Xmx"${SPARK_DRIVER_MEM:-48g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CLASSES:/opt/spark/jars/*" graft.Verify "$SF1" "$DUMP"
+SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-24}" SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-48g}" \
+  tools/java_main.sh graft.Verify "$SF1" "$DUMP" ||
+  echo "[verify_sf1] Verify reported failed queries (named above)" >&2
 
 # GRAFT_APPROX_RECALL=1: approximate-by-design queries (d06) are graded
 # against their pinned recall FLOOR + subset-of-oracle instead of exact match
@@ -72,9 +65,11 @@ if capped:
     retry_dir = tempfile.mkdtemp(prefix="verify_sf1_retry")
     for q in capped:
         os.symlink(os.path.join(dump, q), os.path.join(retry_dir, q))
-    # compare_oracle needs the oracle map next to the dumps
-    os.symlink(os.path.join(dump, "oracle_sql.json"),
-               os.path.join(retry_dir, "oracle_sql.json"))
+    # compare_oracle needs the oracle map next to the dumps; only the capped
+    # entries, since every entry in it is compared
+    oracle = json.load(open(os.path.join(dump, "oracle_sql.json")))
+    json.dump({q: oracle[q] for q in capped},
+              open(os.path.join(retry_dir, "oracle_sql.json"), "w"))
     # the retry tool exits non-zero when queries stay capped/failed — that is
     # phase-2 DATA, not a crash; only a missing report is fatal here
     subprocess.run([sys.executable, tool, retry_dir, sf1,
